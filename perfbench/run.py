@@ -38,7 +38,7 @@ ADD_OPENS = [
     "java.base/sun.nio.ch", "java.base/sun.nio.cs", "java.base/sun.security.action",
     "java.base/sun.util.calendar",
 ]
-JVM_OPTS = ["-Xms2g", "-Xmx2g", "-XX:+UseG1GC", "-XX:+AlwaysPreTouch"] + [
+JVM_OPTS = ["-Xms2g", "-Xmx2g", "-XX:+UseG1GC", "-XX:+AlwaysPreTouch", "-XX:-UsePerfData"] + [
     a for p in ADD_OPENS for a in ("--add-opens", p + "=ALL-UNNAMED")]
 
 
@@ -111,7 +111,9 @@ def run_jvm(args, cp):
     os.makedirs(work)
     log_path = os.path.join(BUILD, "logs", "%s-seed%d-trace%d.log" % (args.workload, args.seed, args.trace))
     os.makedirs(os.path.dirname(log_path), exist_ok=True)
-    cmd = ["java"] + JVM_OPTS + ["-cp", cp, "perfbench.Main",
+    tmp = os.path.join(work, "tmp")
+    os.makedirs(tmp)
+    cmd = ["java"] + JVM_OPTS + ["-Djava.io.tmpdir=" + tmp, "-cp", cp, "perfbench.Main",
            "--workload", args.workload, "--seed", str(args.seed),
            "--seconds", str(args.seconds), "--trace", str(args.trace), "--work", work,
            "--launch-ms", str(int(time.time() * 1000))]

@@ -191,39 +191,41 @@ final class Gen(val shape: Shape, val seed: Long, initialRows: Int) {
 
   private def rngFor(n: Int) = new SplittableRandom(Shape.mix(seed, 0x5EEDL, n.toLong))
 
-  /** `updates` live keys picked uniformly (recentDepth = 0) or with an
-    * exponential skew towards the newest slots whose mean depth is
-    * `recentDepth` × live keys, plus `inserts` new keys.
+  /** `updates` live keys picked uniformly, from all slots (recentShare =
+    * 1) or from the newest `recentShare` of them, plus `inserts` new keys.
+    * A window rather than a decaying skew keeps the set of partitions a
+    * batch touches the same for every seed, so the write work a seed
+    * causes does not depend on how deep its deepest pick happened to reach.
     */
-  def upsert(updates: Int, inserts: Int, recentDepth: Double = 0.0): Batch = {
+  def upsert(updates: Int, inserts: Int, recentShare: Double = 1.0): Batch = {
     batchNo += 1
     val rng = rngFor(batchNo)
-    val picked = pick(rng, updates, recentDepth)
+    val picked = pick(rng, updates, recentShare)
     val fresh = Array.tabulate(inserts)(i => next + i)
     next += inserts
     liveCount += inserts
     Batch("upsert", picked ++ fresh, batchNo)
   }
 
-  def delete(n: Int, recentDepth: Double = 0.0): Batch = {
+  def delete(n: Int, recentShare: Double = 1.0): Batch = {
     batchNo += 1
-    val picked = pick(rngFor(batchNo), n, recentDepth)
+    val picked = pick(rngFor(batchNo), n, recentShare)
     picked.foreach(s => deleted.set(s.toInt))
     liveCount -= picked.length
     Batch("delete", picked, batchNo)
   }
 
-  private def pick(rng: SplittableRandom, n: Int, recentDepth: Double): Array[Long] = {
-    require(n <= liveCount, s"cannot pick $n of $liveCount live keys")
+  private def pick(rng: SplittableRandom, n: Int, recentShare: Double): Array[Long] = {
+    val window = math.max(1L, math.min(next, math.round(recentShare * next)))
+    val from = next - window
+    require(n <= window - deleted.get(from.toInt, next.toInt).cardinality,
+      s"cannot pick $n live keys among the newest $window slots")
     val chosen = new java.util.BitSet
     val out = new Array[Long](n)
     var i = 0
-    val mean = recentDepth * liveCount
     while (i < n) {
-      val s =
-        if (recentDepth <= 0) rng.nextLong(next)
-        else next - 1 - (-math.log(1.0 - rng.nextDouble()) * mean).toLong
-      if (s >= 0 && !deleted.get(s.toInt) && !chosen.get(s.toInt)) {
+      val s = from + rng.nextLong(window)
+      if (!deleted.get(s.toInt) && !chosen.get(s.toInt)) {
         chosen.set(s.toInt)
         out(i) = s
         i += 1

@@ -12,10 +12,12 @@ import org.apache.spark.sql.SparkSession
   *                  --work <dir> [--launch-ms <epoch ms>] [--trace-out <file>]
   *
   * One driver thread calls graft's public clients in a closed loop: each
-  * call starts when the previous one has returned. The run loads the
-  * table, then repeats the workload's round until the rounds have taken
-  * `--seconds` of timed calls. Every metric line goes to stdout; the last
-  * line is `PERFBENCH_RESULT <json>`.
+  * call starts when the previous one has returned. After an untimed
+  * warm-up load of a small throwaway table, the run loads the table, makes
+  * one untimed warm-up round, then repeats the workload's round until the
+  * timed rounds have taken `--seconds` of timed calls.
+  * Every metric line goes to stdout; the last line is
+  * `PERFBENCH_RESULT <json>`.
   */
 object Main {
   /** Spark's broadcast threshold for every run: the size gates that read it
@@ -46,8 +48,12 @@ object Main {
     sys.exit(code)
   }
 
+  /** `local[3]` on a 4-core host leaves one core to the driver thread, the
+    * JIT and the collector; on the 4-core reference host every call ran
+    * about a fifth faster than on `local[4]`.
+    */
   def session(work: Path): SparkSession = {
-    val cores = math.min(4, Runtime.getRuntime.availableProcessors)
+    val cores = math.min(3, Runtime.getRuntime.availableProcessors)
     SparkSession.builder()
       .master(s"local[$cores]")
       .appName("perfbench")
@@ -68,27 +74,33 @@ object Main {
     val spark = session(o.work)
     try {
       spark.sparkContext.setLogLevel("ERROR")
-      val heap = new HeapMonitor
-      // Untimed warm-up: the workload's calls, once each, on a table 1/50
-      // the size under another seed, so the timed calls find classes
-      // loaded, code compiled and generated code cached.
-      val warmRec = new Recorder(spark.sparkContext, traced = false)
-      val warm = lifecycle(spark, wl, o.seed ^ 0x3A3AL, wl.initialRows / 50,
-        o.work.resolve("warmup"), warmRec, checked = false)
-      progress(o, "session up")
-      warm.load()
-      wl.round(warm, warmup = true)
-      progress(o, "warm-up done: " + warmRec.spans.map(s => f"${s.op} ${s.wallNs / 1e9}%.2f").mkString(", "))
-
       val listener = if (o.traced) Some(new JobListener) else None
       listener.foreach(spark.sparkContext.addSparkListener)
       val rec = new Recorder(spark.sparkContext, o.traced)
-      val l = lifecycle(spark, wl, o.seed, wl.initialRows, o.work.resolve("table"), rec, checked = true)
+      val l = new Lifecycle(spark, wl.shape, wl.tableType, o.seed, wl.initialRows, wl.wc,
+        wl.serviceWc, o.work.resolve("table").toString, rec)
+      progress(o, "session up")
+      // Untimed warm-up load of a throwaway table a tenth the size, under
+      // another seed, so the timed load does not pay for first-use class
+      // loading and compilation.
+      val bare = new Recorder(spark.sparkContext, traced = false)
+      bare.recording = false
+      new Lifecycle(spark, wl.shape, wl.tableType, o.seed ^ 0x3A3AL, wl.initialRows / 10, wl.wc,
+        wl.serviceWc, o.work.resolve("warmup").toString, bare).load()
+      progress(o, "warm-up load done")
+      val heap = new HeapMonitor
       l.load()
       progress(o, "load done")
+      // Untimed warm-up pass on the loaded table, with every check, so the
+      // timed round runs warmed code on every side of every size gate it
+      // takes.
+      rec.recording = false
+      wl.round(l, warm = true)
+      rec.recording = true
+      progress(o, "warm-up round done")
       while (rec.round == 0 || timedSeconds(rec) < o.seconds) {
         rec.round += 1
-        wl.round(l, warmup = false)
+        wl.round(l, warm = false)
       }
       progress(o, s"${rec.round} rounds done: " + rec.spans.map(s => f"${s.op} ${s.wallNs / 1e9}%.2f").mkString(", "))
       l.finalChecks()
@@ -115,11 +127,6 @@ object Main {
       progress(o, "session stopped")
     }
   }
-
-  private def lifecycle(spark: SparkSession, wl: Workload, seed: Long, rows: Int, dir: Path,
-      rec: Recorder, checked: Boolean): Lifecycle =
-    new Lifecycle(spark, wl.shape, wl.tableType, seed, rows, wl.wc, wl.serviceWc,
-      dir.toString, rec, checked)
 
   private def progress(o: Opts, what: String): Unit =
     System.err.println(f"perfbench: $what at ${(System.currentTimeMillis() - o.launchMs) / 1e3}%.1f s")
@@ -156,7 +163,10 @@ object Report {
     val load = spans.find(_.op == "write.load").get
     val writes = spans.filter(s => s.round >= 1 && s.op.startsWith("write."))
     val m = new Metrics
-    m("setup_s") = ((load.startMs - launchMs) / 1e3, "s")
+    val firstRound = spans.find(_.round >= 1).get
+    // Everything untimed before the first timed round: session, input
+    // generation, the warm-up load and the warm-up round after the load.
+    m("setup_s") = ((load.startMs - launchMs + firstRound.startMs - load.endMs) / 1e3, "s")
     m("load_s") = (secs(load.wallNs), "s")
     m("write_p50_s") = (median(writes.map(s => secs(s.wallNs))), "s")
     m("write_rows_per_s") = (writes.map(_.rows).sum / secs(writes.map(_.wallNs).sum), "rows/s")

@@ -24,17 +24,28 @@ final case class Span(id: Int, op: String, round: Int, wallNs: Long, rows: Long,
 /** Times every public call of the timed sequence, in both modes. In the
   * traced mode each call also tags the Spark jobs it starts with its span
   * id (a thread-local job property), so the listener can attribute jobs,
-  * tasks and bytes to the call exactly.
+  * tasks and bytes to the call exactly. While `recording` is off (the
+  * warm-up round) calls run bare and leave no span.
+  *
+  * Each recorded call starts, untimed, from a full collection: every call
+  * then begins on the same heap (the live set alone), so a collection
+  * inside it pays for what that call allocated, not for garbage earlier
+  * calls left, and its after-GC heap shows what the call keeps.
   */
 final class Recorder(sc: SparkContext, val traced: Boolean) {
   val spans = new ArrayBuffer[Span]
   var round = 0
+  var recording = true
   private val gcBeans = ManagementFactory.getGarbageCollectorMXBeans.asScala.toSeq
   private val uptime = ManagementFactory.getRuntimeMXBean
 
   private def gcMillis: Long = gcBeans.map(b => math.max(0L, b.getCollectionTime)).sum
 
-  def call[T](op: String, rows: T => Long)(body: => T): T = {
+  def call[T](op: String, rows: T => Long)(body: => T): T =
+    if (recording) timed(op, rows)(body) else body
+
+  private def timed[T](op: String, rows: T => Long)(body: => T): T = {
+    System.gc()
     val id = spans.size
     if (traced) sc.setLocalProperty(Recorder.SpanProperty, id.toString)
     val gc0 = gcMillis

@@ -13,14 +13,13 @@ import graft.services.TableServices
 import graft.write.{GraftWriteClient, WriteConfig}
 
 /** One table's life under a workload: the timed public calls into graft,
-  * each followed (untimed) by the checks against the model, unless
-  * `checked` is off (the warm-up). Input frames are generated and
-  * materialized before the call that receives them, so a call's time holds
-  * no generation work.
+  * each followed (untimed) by the checks against the model. Input frames
+  * are generated and materialized before the call that receives them, so a
+  * call's time holds no generation work.
   */
 final class Lifecycle(spark: SparkSession, val shape: Shape, tableType: String,
     seed: Long, initialRows: Int, wc: WriteConfig, serviceWc: WriteConfig, val path: String,
-    val rec: Recorder, checked: Boolean) {
+    val rec: Recorder) {
   val gen = new Gen(shape, seed, initialRows)
   val model = new Model(shape)
   /** Instant of each write; index 0 is the load. */
@@ -37,7 +36,7 @@ final class Lifecycle(spark: SparkSession, val shape: Shape, tableType: String,
   def lastWrite: Int = instants.size - 1
 
   private def check(name: String, ok: => Boolean, detail: => String): Unit =
-    if (checked && !ok) failures += s"$name: $detail"
+    if (!ok) failures += s"$name: $detail"
 
   /** The batch's rows, generated in Spark tasks and held in memory. */
   private def frame(b: Batch): DataFrame = {
@@ -60,7 +59,7 @@ final class Lifecycle(spark: SparkSession, val shape: Shape, tableType: String,
     val b = gen.initial
     val df = frame(b)
     instants += rec.call("write.load", (_: String) => b.rows)(writer.bulkInsert(df))
-    if (checked) model.upsert(df, 0)
+    model.upsert(df, 0)
     df.unpersist(blocking = true)
   }
 
@@ -82,8 +81,7 @@ final class Lifecycle(spark: SparkSession, val shape: Shape, tableType: String,
     instants += rec.call(op, (_: String) => b.rows) {
       if (b.op == "delete") writer.delete(df) else writer.upsert(df)
     }
-    if (!checked) ()
-    else if (b.op == "delete") model.delete(b.slots)
+    if (b.op == "delete") model.delete(b.slots)
     else model.upsert(df, lastWrite)
     df.unpersist(blocking = true)
   }
@@ -102,6 +100,15 @@ final class Lifecycle(spark: SparkSession, val shape: Shape, tableType: String,
     val got = rec.call("read.snapshot", (c: Checksum) => c.rows)(
       Checksum.of(data(reader.snapshot()), shape))
     check("snapshot equals model", got == model.checksum, s"graft $got, model ${model.checksum}")
+  }
+
+  /** `times` back-to-back pairs of a snapshot read and an incremental read
+    * from write `fromWrite`: reads change nothing, so repeating them adds
+    * samples of the short calls without moving the table on.
+    */
+  def reads(fromWrite: Int, times: Int): Unit = for (_ <- 1 to times) {
+    snapshot()
+    incremental(fromWrite)
   }
 
   /** Incremental read of everything written after write `fromWrite`. */
@@ -128,7 +135,7 @@ final class Lifecycle(spark: SparkSession, val shape: Shape, tableType: String,
       s"read-optimized $ro, model ${model.checksum}")
   }
 
-  def finalChecks(): Unit = if (checked) {
+  def finalChecks(): Unit = {
     val snap = snapshotFrame
     check("final snapshot equals model", Checksum.of(snap, shape) == model.checksum,
       s"model ${model.checksum}")
@@ -145,32 +152,47 @@ final class Lifecycle(spark: SparkSession, val shape: Shape, tableType: String,
 
 /** A workload: a table shape and size, and the round of calls it repeats
   * until the run's measuring time is used up. Batch sizes are fractions of
-  * the live rows, so the warm-up can run the round on a small table; the
-  * warm-up round makes each kind of call once, skipping repeats.
+  * the live rows. The warm-up round (`warm`) makes each distinct call of
+  * the round once, in order, on the full-size table, so that every gate
+  * side the timed round takes has run once; a timed round repeats each
+  * read point's pair of reads [[readRepeats]] times.
   */
 abstract class Workload(val name: String, val shape: Shape, val tableType: String,
     val initialRows: Int) {
   /** Compaction runs only when the round calls it. */
   def wc: WriteConfig = WriteConfig(inlineCompactDeltaCommits = 0)
   def serviceWc: WriteConfig = WriteConfig()
-  def round(l: Lifecycle, warmup: Boolean): Unit
+  def readRepeats: Int = 1
+  def round(l: Lifecycle, warm: Boolean): Unit
   protected def n(l: Lifecycle, share: Double): Int =
     math.max(1, math.round(l.gen.live * share).toInt)
+  /** A read point: snapshot and incremental reads from write `from`. */
+  protected def reads(l: Lifecycle, warm: Boolean, from: Int): Unit =
+    l.reads(from, if (warm) 1 else readRepeats)
+  /** The incremental reads start two writes back. */
+  protected def recent(l: Lifecycle): Int = math.max(0, l.lastWrite - 2)
 }
 
 object Workload {
-  /** Streaming ingest into a COW table: many small commits. Every size
-    * gate sits on its small side (inverted tag join, driver staged stats).
+  /** Streaming ingest into a COW table: many small commits, every third
+    * a delete. Every size gate sits on its small side (inverted tag join,
+    * driver staged stats). Its reads are short, so each read point repeats
+    * them three times.
     */
   object CowTrickle extends Workload("cow_trickle", Orders, GraftTableType.Cow, 100000) {
-    def round(l: Lifecycle, warmup: Boolean): Unit = {
-      def upsert(): Unit = l.write(l.gen.upsert(n(l, 0.0024), n(l, 0.0006), recentDepth = 0.06))
-      def reads(): Unit = { l.snapshot(); l.incremental(math.max(0, l.lastWrite - 2)) }
+    override def readRepeats: Int = 3
+    def round(l: Lifecycle, warm: Boolean): Unit = {
+      def upsert(): Unit = l.write(l.gen.upsert(n(l, 0.0024), n(l, 0.0006), recentShare = 0.06))
+      def delete(): Unit = l.write(l.gen.delete(n(l, 0.001), recentShare = 0.06))
       l.open()
       upsert()
-      if (!warmup) { upsert(); reads(); upsert() }
-      l.write(l.gen.delete(n(l, 0.001), recentDepth = 0.06))
-      reads()
+      if (!warm) upsert()
+      delete()
+      reads(l, warm, recent(l))
+      upsert()
+      if (!warm) upsert()
+      delete()
+      reads(l, warm, recent(l))
       l.service("services.clean")(_.clean(retainCommits = 2))
       l.service("services.archive")(_.archive(minCommits = 3, maxCommits = 4))
     }
@@ -180,35 +202,37 @@ object Workload {
     * threshold, then a compaction pays it off.
     */
   object MorMergeRead extends Workload("mor_merge_read", Lineitem, GraftTableType.Mor, 100000) {
-    def round(l: Lifecycle, warmup: Boolean): Unit = {
+    def round(l: Lifecycle, warm: Boolean): Unit = {
       l.open()
-      def readBoth(): Unit = { l.snapshot(); l.incremental(math.max(0, l.lastWrite - 2)) }
-      l.write(l.gen.upsert(n(l, 0.05), 0)); readBoth()
+      l.write(l.gen.upsert(n(l, 0.05), 0))
+      reads(l, warm, recent(l))
       l.write(l.gen.delete(n(l, 0.02)))
-      if (!warmup) { l.write(l.gen.upsert(n(l, 0.06), n(l, 0.02))); readBoth() }
+      l.write(l.gen.upsert(n(l, 0.06), n(l, 0.02)))
+      reads(l, warm, recent(l))
       l.service("services.compact")(_.compact())
       l.readOptimizedEqualsSnapshot()
-      readBoth()
+      reads(l, warm, recent(l))
       l.service("services.clean")(_.clean(retainCommits = 2))
     }
   }
 
   /** Large batches into a COW table: the 40% upsert takes the distributed
     * side of every write gate. Inserts open new file groups (no small-file
-    * packing) so that clustering has groups to consolidate.
+    * packing) so that clustering has groups to consolidate. Its reads are
+    * short next to its writes, so each read point repeats them three times.
     */
   object CowLargeBatch extends Workload("cow_large_batch", Lineitem, GraftTableType.Cow, 100000) {
     override def wc: WriteConfig = super.wc.copy(smallFileLimitBytes = 0L)
-    def round(l: Lifecycle, warmup: Boolean): Unit = {
+    override def readRepeats: Int = 3
+    def round(l: Lifecycle, warm: Boolean): Unit = {
       l.open()
-      if (!warmup) l.write(l.gen.upsert(n(l, 0.40), 0))
+      l.write(l.gen.upsert(n(l, 0.40), 0))
       val from = l.lastWrite
       l.write(l.gen.upsert(n(l, 0.02), n(l, 0.10)))
       l.write(l.gen.delete(n(l, 0.10)))
-      l.snapshot()
-      l.incremental(from)
+      reads(l, warm, from)
       l.service("services.cluster")(_.cluster())
-      if (!warmup) { l.snapshot(); l.incremental(from) }
+      reads(l, warm, from)
       l.service("services.clean")(_.clean(retainCommits = 2))
     }
   }

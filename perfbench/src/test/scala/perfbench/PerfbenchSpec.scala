@@ -20,7 +20,7 @@ class PerfbenchSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private def batches(shape: Shape, seed: Long) = {
     val g = new Gen(shape, seed, 2000)
-    Seq(g.upsert(300, 50, recentDepth = 0.04), g.delete(100), g.upsert(800, 0))
+    Seq(g.upsert(300, 50, recentShare = 0.4), g.delete(100), g.upsert(800, 0))
       .map(b => (b.op, b.slots.toSeq, g.rowsOf(b).toSeq))
   }
 
@@ -32,12 +32,13 @@ class PerfbenchSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("picked keys are live and distinct, deleted keys never come back") {
+  test("picked keys are live, distinct and recent, deleted keys never come back") {
     val g = new Gen(Orders, 3, 1000)
     val dead = g.delete(400).slots.toSet
-    val up = g.upsert(500, 20, recentDepth = 0.1).slots
+    val up = g.upsert(300, 20, recentShare = 0.8).slots
     assert(up.distinct.length == up.length)
     assert(up.forall(s => !dead(s)))
+    assert(up.take(300).forall(_ >= 200))
     assert(g.live == 620)
   }
 
@@ -45,9 +46,9 @@ class PerfbenchSpec extends AnyFunSuite with BeforeAndAfterAll {
     for (wl <- Workload.all) {
       val rec = new Recorder(spark.sparkContext, traced = true)
       val l = new Lifecycle(spark, wl.shape, wl.tableType, 11, 3000, wl.wc, wl.serviceWc,
-        work.resolve(wl.name).toString, rec, checked = true)
+        work.resolve(wl.name).toString, rec)
       l.load()
-      wl.round(l, warmup = false)
+      wl.round(l, warm = false)
       l.finalChecks()
       assert(l.failures.isEmpty, wl.name)
       assert(rec.spans.map(_.op).distinct.forall(Report.Ops.contains), wl.name)
@@ -57,10 +58,9 @@ class PerfbenchSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("the snapshot check fails on one altered row and on one dropped row") {
     val wl = Workload.MorMergeRead
     val l = new Lifecycle(spark, wl.shape, wl.tableType, 5, 2000, wl.wc, wl.serviceWc,
-      work.resolve("planted").toString, new Recorder(spark.sparkContext, traced = false),
-      checked = true)
+      work.resolve("planted").toString, new Recorder(spark.sparkContext, traced = false))
     l.load()
-    wl.round(l, warmup = false)
+    wl.round(l, warm = false)
     val snap = l.snapshotFrame.cache()
     val want = l.model.checksum
     assert(Checksum.of(snap, wl.shape) == want)
