@@ -38,7 +38,7 @@ ADD_OPENS = [
     "java.base/sun.nio.ch", "java.base/sun.nio.cs", "java.base/sun.security.action",
     "java.base/sun.util.calendar",
 ]
-JVM_OPTS = ["-Xms2g", "-Xmx2g", "-XX:+UseG1GC", "-XX:+AlwaysPreTouch", "-XX:-UsePerfData"] + [
+JVM_OPTS = ["-Xms2g", "-Xmx2g", "-Xmn128m", "-XX:+UseG1GC", "-XX:+AlwaysPreTouch", "-XX:-UsePerfData"] + [
     a for p in ADD_OPENS for a in ("--add-opens", p + "=ALL-UNNAMED")]
 
 
@@ -102,6 +102,8 @@ def classpath():
     os.makedirs(BUILD, exist_ok=True)
     with open(cache, "w") as fh:
         fh.write(st + "\n" + cps[-1].strip() + "\n")
+    # Write the build's output back to disk now, not during the timed run.
+    os.sync()
     return cps[-1].strip()
 
 

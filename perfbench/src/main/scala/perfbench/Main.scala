@@ -185,6 +185,11 @@ object Report {
     "read.incremental", "services.clean", "services.archive", "services.compact",
     "services.cluster", "core.open")
 
+  /** Ops of workloads outside BENCHMARK.json (clustering, in `cow_large_batch`):
+    * their metrics are printed only by runs that call them.
+    */
+  val HandRunOps: Set[String] = Set("services.cluster")
+
   /** Job-busy time of a span: the union of its jobs' intervals. */
   private def busyMs(s: Span, jobs: Seq[JobRecord]): Long = {
     val iv = jobs.map(j => (math.max(j.startMs, s.startMs),
@@ -206,7 +211,7 @@ object Report {
     val spans = rec.spans.toSeq
     val m = new Metrics
     def js(s: Span) = jobs.getOrElse(s.id, Nil)
-    for (op <- Ops) {
+    for (op <- Ops if !HandRunOps(op) || spans.exists(_.op == op)) {
       val calls = spans.filter(_.op == op)
       def mean(f: Span => Double) = if (calls.isEmpty) 0.0 else calls.map(f).sum / calls.size
       val wall = mean(s => secs(s.wallNs))

@@ -150,12 +150,13 @@ final class Lifecycle(spark: SparkSession, val shape: Shape, tableType: String,
   }
 }
 
-/** A workload: a table shape and size, and the round of calls it repeats
-  * until the run's measuring time is used up. Batch sizes are fractions of
-  * the live rows. The warm-up round (`warm`) makes each distinct call of
-  * the round once, in order, on the full-size table, so that every gate
-  * side the timed round takes has run once; a timed round repeats each
-  * read point's pair of reads [[readRepeats]] times.
+/** A workload: a table shape and size, and the cycle of calls a round
+  * repeats [[cycles]] times; each cycle starts by reopening the table.
+  * Runs repeat whole rounds until the measuring time is used up. Batch
+  * sizes are fractions of the live rows. The warm-up round (`warm`) makes
+  * one cycle, with one pair of reads a read point, on the full-size table,
+  * so that every gate side the timed round takes has run once; a timed
+  * round repeats each read point's pair of reads [[readRepeats]] times.
   */
 abstract class Workload(val name: String, val shape: Shape, val tableType: String,
     val initialRows: Int) {
@@ -163,7 +164,13 @@ abstract class Workload(val name: String, val shape: Shape, val tableType: Strin
   def wc: WriteConfig = WriteConfig(inlineCompactDeltaCommits = 0)
   def serviceWc: WriteConfig = WriteConfig()
   def readRepeats: Int = 1
-  def round(l: Lifecycle, warm: Boolean): Unit
+  def cycles: Int = 1
+  protected def cycle(l: Lifecycle, warm: Boolean): Unit
+  def round(l: Lifecycle, warm: Boolean): Unit =
+    for (_ <- 1 to (if (warm) 1 else cycles)) {
+      l.open()
+      cycle(l, warm)
+    }
   protected def n(l: Lifecycle, share: Double): Int =
     math.max(1, math.round(l.gen.live * share).toInt)
   /** A read point: snapshot and incremental reads from write `from`. */
@@ -175,23 +182,19 @@ abstract class Workload(val name: String, val shape: Shape, val tableType: Strin
 
 object Workload {
   /** Streaming ingest into a COW table: many small commits, every third
-    * a delete. Every size gate sits on its small side (inverted tag join,
-    * driver staged stats). Its reads are short, so each read point repeats
-    * them three times.
+    * a delete, each three followed by reads, a clean and an archive. Every
+    * size gate sits on its small side (inverted tag join, driver staged
+    * stats). Its reads and services are short: a round makes three cycles
+    * and each read point repeats its reads three times.
     */
   object CowTrickle extends Workload("cow_trickle", Orders, GraftTableType.Cow, 100000) {
     override def readRepeats: Int = 3
-    def round(l: Lifecycle, warm: Boolean): Unit = {
+    override def cycles: Int = 3
+    def cycle(l: Lifecycle, warm: Boolean): Unit = {
       def upsert(): Unit = l.write(l.gen.upsert(n(l, 0.0024), n(l, 0.0006), recentShare = 0.06))
-      def delete(): Unit = l.write(l.gen.delete(n(l, 0.001), recentShare = 0.06))
-      l.open()
       upsert()
-      if (!warm) upsert()
-      delete()
-      reads(l, warm, recent(l))
       upsert()
-      if (!warm) upsert()
-      delete()
+      l.write(l.gen.delete(n(l, 0.001), recentShare = 0.06))
       reads(l, warm, recent(l))
       l.service("services.clean")(_.clean(retainCommits = 2))
       l.service("services.archive")(_.archive(minCommits = 3, maxCommits = 4))
@@ -199,11 +202,13 @@ object Workload {
   }
 
   /** MOR merge reads: delta commits raise the merge debt past the broadcast
-    * threshold, then a compaction pays it off.
+    * threshold, then a compaction pays it off. One cycle holds a single
+    * compaction and three writes, too few samples for steady figures, so a
+    * round makes two cycles.
     */
   object MorMergeRead extends Workload("mor_merge_read", Lineitem, GraftTableType.Mor, 100000) {
-    def round(l: Lifecycle, warm: Boolean): Unit = {
-      l.open()
+    override def cycles: Int = 2
+    def cycle(l: Lifecycle, warm: Boolean): Unit = {
       l.write(l.gen.upsert(n(l, 0.05), 0))
       reads(l, warm, recent(l))
       l.write(l.gen.delete(n(l, 0.02)))
@@ -224,8 +229,7 @@ object Workload {
   object CowLargeBatch extends Workload("cow_large_batch", Lineitem, GraftTableType.Cow, 100000) {
     override def wc: WriteConfig = super.wc.copy(smallFileLimitBytes = 0L)
     override def readRepeats: Int = 3
-    def round(l: Lifecycle, warm: Boolean): Unit = {
-      l.open()
+    def cycle(l: Lifecycle, warm: Boolean): Unit = {
       l.write(l.gen.upsert(n(l, 0.40), 0))
       val from = l.lastWrite
       l.write(l.gen.upsert(n(l, 0.02), n(l, 0.10)))
